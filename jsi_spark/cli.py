@@ -15,7 +15,6 @@ Subcommands:
                     (O(delta); cross-snapshot uniqueness via the
                     id-index table). Idempotent — run it from cron.
   stats             per-column stats table only.
-  bench             the bench.full_pass headline (sandbox convenience).
 """
 
 from __future__ import annotations
@@ -64,9 +63,6 @@ def main(argv=None):
     _add_common(s)
     s.add_argument("--columns", nargs="*", default=None)
 
-    b = sub.add_parser("bench")
-    b.add_argument("--n-docs", type=int, default=1_000_000)
-
     args = ap.parse_args(argv)
     spark = get_spark("jsi-spark-cli")
     ensure_py_files(spark)
@@ -113,11 +109,6 @@ def main(argv=None):
         column_stats(df, args.columns or None).write.mode(
             "overwrite").parquet(args.out)
         print(json.dumps({"out": args.out}))
-    elif args.cmd == "bench":
-        from bench import full_pass
-        secs = full_pass(spark, args.n_docs)
-        print(json.dumps({"n_docs": args.n_docs, "secs": secs,
-                          "docs_per_sec": args.n_docs / secs}))
     return 0
 
 

@@ -27,9 +27,13 @@ changed is re-examined).
   (drift_baseline.json, written by the earliest run): each delta's
   n_spans distribution gets a PSI against it — exactly the "is today's
   append shaped like the corpus start" question drift monitoring asks.
-- **Idempotent per (output table, input snapshot).** Each output table
-  append carries meta {"source_snapshot": sid}; a crashed run re-runs
-  only the table×snapshot cells that never committed, so restarts never
+- **Idempotent per (output table, input snapshot).** Each snapshot is
+  one unit of the batch pipeline's commit core
+  (``ValidationPipeline._commit_unit``): its checked rows are persisted
+  once (the cache is bounded by the append, not the corpus), the audit
+  tables are written concurrently, and each append carries meta
+  {"source_snapshot": sid}. A crashed run re-runs only the
+  table×snapshot cells that never committed, so restarts never
   double-append. The id-index append is LAST — a snapshot counts as
   consumed only once its ids are indexed.
 """
@@ -41,11 +45,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jsi_spark.exec.verdicts import partition_verdicts
 from jsi_spark.io.checkpoint import _now
 from jsi_spark.io.tableio import SnapshotTable
-from jsi_spark.pipeline import (VIOLATION_OUT_COLS, LINEAGE_SCHEMA,
-                                ValidationPipeline)
+from jsi_spark.pipeline import ValidationPipeline, lineage_rows
 
 CROSS_DUP_KEY = "validation.corpus.duplicate_doc_id.cross_snapshot"
 
@@ -58,11 +60,9 @@ class IncrementalValidator:
     def __init__(self, corpus: SnapshotTable, out_dir: str,
                  schema: dict | None = None, n_buckets: int = 32,
                  salt_buckets: int = 64, broadcast_dim: bool = True,
-                 pipeline: ValidationPipeline | None = None,
-                 cache_delta: bool = True):
+                 pipeline: ValidationPipeline | None = None):
         self.corpus = corpus
         self.out_dir = out_dir
-        self.cache_delta = cache_delta
         # a prebuilt pipeline skips recompiling the schema (the typed
         # validator's Column tree costs driver seconds to build and is
         # reusable across any corpus with the same struct)
@@ -102,103 +102,39 @@ class IncrementalValidator:
         """Delta doc_ids already present in ANY consumed snapshot, as
         violation rows. Semi-join against the id index — never the
         corpus itself."""
-        idx = self.tables["id_index"].read(spark)
-        base = (checked.select("doc_id", "part")
-                if idx is None else
-                checked.select("doc_id", "part")
-                .join(idx.select("doc_id").distinct(), "doc_id",
-                      "left_semi"))
-        if idx is None:  # first snapshot: nothing to collide with
-            base = base.limit(0)
-        return base.select(
+        dups = checked.select(
             "doc_id", F.lit("uniqueness").alias("keyword"),
             F.lit("/doc_id").alias("ptr"),
             F.lit(None).cast("int").alias("span_index"),
             F.lit(CROSS_DUP_KEY).alias("message_key"), "part")
-
-    def _process(self, spark: SparkSession, snap: dict,
-                 media_dim: DataFrame) -> None:
-        sid = snap["snapshot_id"]
-        started = _now()
-        delta = self._snapshot_df(spark, snap)
-        checked = self.pipeline.checked(delta)
-        if self.cache_delta:
-            # the four output stages (violations / metrics / verdicts /
-            # id-index) would otherwise each re-scan the snapshot and
-            # re-evaluate the validator tree. The cache is bounded by
-            # the APPEND size, not the corpus — the knob exists for
-            # deltas that outgrow cluster memory (recompute instead)
-            from pyspark.storagelevel import StorageLevel
-            checked = checked.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            self._stages(spark, sid, started, checked, media_dim)
-        finally:
-            if self.cache_delta:
-                checked.unpersist()
-
-    def _stages(self, spark: SparkSession, sid: str, started: str,
-                checked: DataFrame, media_dim: DataFrame) -> None:
-        # The four audit outputs are independent of each other; submit
-        # them CONCURRENTLY (same rationale as bench.full_pass: a
-        # sequential submit strands executors in every stage tail, and
-        # the persisted delta's partitions are computed exactly once —
-        # the block manager serializes per-block computation across
-        # jobs). id_index stays strictly LAST: it is the consumed
-        # marker, so a crash mid-way re-runs only unfinished cells.
-        def _violations():
-            viol = (self.pipeline.local_violations(checked)
-                    .unionByName(self.pipeline.corpus_violations(
-                        checked, media_dim))
-                    .unionByName(self.cross_snapshot_dups(checked, spark)))
-            self.tables["violations"].append(
-                viol.select(*VIOLATION_OUT_COLS),
-                {"source_snapshot": sid})
-
-        def _metrics():
-            metr = self.pipeline.metrics(checked).unionByName(
-                self.pipeline.drift_metrics(checked, self.out_dir))
-            self.tables["metrics"].append(metr, {"source_snapshot": sid})
-
-        def _verdicts():
-            verd = partition_verdicts(checked).withColumn(
-                "snapshot_id", F.lit(sid))
-            self.tables["verdicts"].append(verd, {"source_snapshot": sid})
-
-        def _lineage():
-            parts = list(range(self.pipeline.n_buckets))
-            rows = [(f"inc-{sid}", p, sid, "committed", started, _now())
-                    for p in parts]
-            self.tables["lineage"].append(
-                spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                {"source_snapshot": sid})
-
-        from concurrent.futures import ThreadPoolExecutor
-        todo = [(name, fn) for name, fn in
-                [("violations", _violations), ("metrics", _metrics),
-                 ("verdicts", _verdicts), ("lineage", _lineage)]
-                if sid not in self._sources(name)]
-        if todo:
-            with ThreadPoolExecutor(max_workers=len(todo)) as pool:
-                futs = [pool.submit(fn) for _, fn in todo]
-                for f in futs:
-                    f.result()
-
-        # LAST: indexing the delta's ids marks the snapshot consumed
-        if sid not in self._sources("id_index"):
-            self.tables["id_index"].append(
-                checked.select("doc_id", "part"),
-                {"source_snapshot": sid})
+        idx = self.tables["id_index"].read(spark)
+        if idx is None:  # first snapshot: nothing to collide with
+            return dups.limit(0)
+        return dups.join(idx.select("doc_id"), "doc_id", "left_semi")
 
     # -- public API ----------------------------------------------------------------
 
     def run_once(self, spark: SparkSession,
                  media_dim: DataFrame) -> dict:
-        """Validate every pending snapshot, oldest first. Returns the
-        snapshot ids consumed by THIS call."""
-        consumed = []
+        """Validate every pending snapshot, oldest first, each as one
+        commit unit. Returns the snapshot ids consumed by THIS call."""
+        vp, consumed = self.pipeline, []
         for snap in self.pending():
-            self._process(spark, snap, media_dim)
-            consumed.append(snap["snapshot_id"])
+            sid, started = snap["snapshot_id"], _now()
+            vp._commit_unit(
+                self.tables, vp.checked(self._snapshot_df(spark, snap)),
+                media_dim, {"source_snapshot": sid},
+                lambda rows, *_: rows.select("doc_id", "part"),
+                add={
+                    "violations": lambda rows: self.cross_snapshot_dups(
+                        rows, spark),
+                    "metrics": lambda rows: vp.drift_metrics(
+                        rows, self.out_dir),
+                    "lineage": lambda _: lineage_rows(
+                        spark, f"inc-{sid}", range(vp.n_buckets), sid,
+                        started),
+                })
+            consumed.append(sid)
         return {"consumed": consumed,
                 "tables": {k: v.dir for k, v in self.tables.items()}}
 

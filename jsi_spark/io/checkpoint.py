@@ -56,12 +56,6 @@ class RunState:
                 "started_at": started_at, "finished_at": finished}
         self._save(self.state)
 
-    def lineage_rows(self) -> list[tuple]:
-        """(run_id, part, snapshot_id, status, started_at, finished_at)"""
-        return [(self.run_id, int(p), v["snapshot_id"], v["status"],
-                 v["started_at"], v["finished_at"])
-                for p, v in self.state["completed_parts"].items()]
-
     @property
     def global_done(self) -> bool:
         return self.state["global_done"]

@@ -67,9 +67,6 @@ class SnapshotTable:
             out.extend(s["batches"])
         return out
 
-    def snapshot_ids(self) -> list[str]:
-        return [s["snapshot_id"] for s in self.manifest()["snapshots"]]
-
     # -- write (staged) / commit ----------------------------------------------
 
     def stage_batch(self, df: DataFrame) -> str:

@@ -287,7 +287,7 @@ def embedding_near_duplicates(emb: DataFrame, planes: list,
     both the bucket-size census and the self-join) via ops.dedup's
     session cache — callers that run many queries in one session should
     call ``jsi_spark.ops.dedup.release_caches()`` after collecting
-    (bench.py and tests/test_plans.py do; the frame is (long,int,long)
+    (tests/test_plans.py does; the frame is (long,int,long)
     rows, ~20 B/vector/table, recompute-safe if evicted).
     """
     tables = [planes] if isinstance(planes[0][0], (int, float)) else planes

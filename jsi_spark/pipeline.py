@@ -1,15 +1,18 @@
 """The full validation pass: compile once → per-partition keyword
-validation → corpus constraints → verdicts / violations / metrics /
+validation and corpus constraints → verdicts / violations / metrics /
 lineage tables, resumable from checkpoint.
 
 This is the Spark re-expression of ``jsi_validate`` (reference:
 lib/jsi/schema.rb:864-890) lifted to corpus scale per north_rule:
-driver compiles the schema; executors run vectorized Column plans;
-the only shuffles are (1) per-part verdict/metric hash aggs (tiny),
-(2) the salted uniqueness agg, (3) the referential anti-join (map-side
-when the dim broadcasts). Violations expand on FAILING rows only —
-the Result::Valid/Result::Full two-pass split
-(lib/jsi/validation/result.rb:185-199) done with a filter.
+driver compiles the schema; executors run vectorized Column plans.
+Batch runs and incremental appends commit through one core,
+:meth:`ValidationPipeline._commit_unit`, with no global corpus stage:
+``part`` hashes doc_id, so every copy of a doc_id shares a bucket and
+uniqueness is exact per chunk of buckets. The only shuffles are (1)
+per-part verdict/metric hash aggs (tiny), (2) the salted uniqueness agg,
+(3) the referential anti-join (map-side when the dim broadcasts).
+Violations expand on FAILING rows only — the Result::Valid/Result::Full
+two-pass split (lib/jsi/validation/result.rb:185-199) done with a filter.
 """
 
 from __future__ import annotations
@@ -17,10 +20,13 @@ from __future__ import annotations
 import json
 import math
 import os
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from jsi_spark.compile.compiler import CompiledSchema, compile_schema
 from jsi_spark.exec.columnar import TypedValidator
@@ -45,6 +51,24 @@ def _parts_done(table: SnapshotTable) -> set[int]:
     for s in table.manifest()["snapshots"]:
         done.update(s.get("meta", {}).get("parts", []))
     return done
+
+
+def _pending(table: SnapshotTable, key: dict) -> dict | None:
+    """What of ``key`` ``table`` has not committed: for a parts key the
+    parts no snapshot recorded, otherwise the whole key unless some
+    snapshot's meta carries it. None when nothing is left."""
+    if "parts" in key:
+        todo = sorted(set(key["parts"]) - _parts_done(table))
+        return {"parts": todo} if todo else None
+    metas = [s.get("meta", {}) for s in table.manifest()["snapshots"]]
+    return None if any(key.items() <= m.items() for m in metas) else key
+
+
+def lineage_rows(spark: SparkSession, run_id: str, parts,
+                 snapshot_id: str, started: str) -> DataFrame:
+    return spark.createDataFrame(
+        [(run_id, p, snapshot_id, "committed", started, _now())
+         for p in parts], LINEAGE_SCHEMA)
 
 
 class ValidationPipeline:
@@ -88,17 +112,15 @@ class ValidationPipeline:
                              group_by="part")
                 .withColumn("psi", F.lit(None).cast("double")))
 
-    # -- corpus stage (global) ----------------------------------------------------
-
-    def corpus_violations(self, docs_p: DataFrame,
+    def corpus_violations(self, checked: DataFrame,
                           media_dim: DataFrame) -> DataFrame:
-        uniq = uniqueness_violations(docs_p, "doc_id", self.salt_buckets) \
-            .join(docs_p.select("doc_id", "part").distinct(), "doc_id") \
-            .select(*VIOLATION_OUT_COLS)
-        ref = with_part(
-            referential_violations(docs_p, media_dim, self.broadcast_dim),
-            self.n_buckets).select(*VIOLATION_OUT_COLS)
-        return uniq.unionByName(ref)
+        """Uniqueness and referential violation rows. Exact over any set
+        of whole part buckets: ``part`` hashes doc_id, so every copy of
+        an id shares a bucket, and a dangling ref is a per-row fact."""
+        uniq = uniqueness_violations(checked, "doc_id", self.salt_buckets)
+        ref = referential_violations(checked, media_dim, self.broadcast_dim)
+        return with_part(uniq.unionByName(ref),
+                         self.n_buckets).select(*VIOLATION_OUT_COLS)
 
     def drift_metrics(self, docs_p: DataFrame, out_dir: str) -> DataFrame:
         """PSI of the n_spans distribution vs the first run's baseline
@@ -134,6 +156,56 @@ class ValidationPipeline:
 
     # -- orchestration --------------------------------------------------------------
 
+    def _commit_unit(self, tables: dict[str, SnapshotTable],
+                     rows: DataFrame, media_dim: DataFrame, key: dict,
+                     marker: Callable, add: dict | None = None) -> str:
+        """Commit one unit of work — the checked ``rows`` of a chunk of
+        part buckets (key ``{"parts": [...]}``) or of one source snapshot
+        (key ``{"source_snapshot": sid}``) — and return the first snapshot
+        it committed ("snap-preexisting" if none).
+
+        The rows are persisted once. Violations (keyword ∪ uniqueness ∪
+        referential), verdicts, per-part metrics and whatever ``add``
+        builds per table are written concurrently (the block manager
+        computes each persisted partition once across the jobs). The
+        last of ``tables`` is the caller's marker, ``marker(rows, key,
+        snap)``, committed after all others. A table that recorded the
+        key, or some of a chunk's parts, commits only the rest: neither
+        a crash between commits nor a rechunked resume commits a row
+        twice."""
+        core = {
+            "violations": lambda r: self.local_violations(r).unionByName(
+                self.corpus_violations(r, media_dim)),
+            "verdicts": partition_verdicts,
+            "metrics": self.metrics,
+        }
+        add = add or {}
+        *data, last = tables
+        todo = {name: _pending(tables[name], key) for name in tables}
+
+        def rows_for(part_key):
+            return (rows if part_key == key else
+                    rows.filter(F.col("part").isin(part_key["parts"])))
+
+        def write(name):
+            r = rows_for(todo[name])
+            out = reduce(DataFrame.unionByName,
+                         [f(r) for f in (core.get(name), add.get(name)) if f])
+            return tables[name].append(out, todo[name])
+
+        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            with ThreadPoolExecutor(max_workers=len(data)) as pool:
+                futs = [pool.submit(write, n) for n in data if todo[n]]
+                snaps = [f.result() for f in futs]
+            snap = snaps[0] if snaps else "snap-preexisting"
+            if todo[last]:
+                tables[last].append(
+                    marker(rows_for(todo[last]), todo[last], snap), todo[last])
+            return snap
+        finally:
+            rows.unpersist()
+
     def run(self, spark: SparkSession, docs: DataFrame,
             media_dim: DataFrame, out_dir: str,
             parts_per_job: int | None = None,
@@ -142,7 +214,9 @@ class ValidationPipeline:
         how many partition buckets commit together (default: all pending
         in one job — fewer, bigger jobs; tests use small values to
         exercise resume). ``fail_after_jobs`` simulates a crash for the
-        kill/restart test."""
+        kill/restart test. Each chunk's lineage commits last, before the
+        run state records its parts; the corpus-wide drift row commits
+        after every chunk."""
         state = RunState(out_dir)
         tables = {name: SnapshotTable(out_dir, name)
                   for name in ("violations", "verdicts", "metrics",
@@ -152,46 +226,19 @@ class ValidationPipeline:
         pending = sorted(set(range(self.n_buckets)) -
                          state.completed_parts())
         chunk = parts_per_job or max(len(pending), 1)
-        jobs = [pending[i:i + chunk] for i in range(0, len(pending), chunk)]
-        for j, parts in enumerate(jobs):
+        for j, i in enumerate(range(0, len(pending), chunk)):
             if fail_after_jobs is not None and j >= fail_after_jobs:
                 raise RuntimeError("simulated crash for resume test")
-            started = _now()
-            stage_of = {
-                "violations": self.local_violations,
-                "verdicts": partition_verdicts,
-                "metrics": self.metrics,
-            }
-            # Per-table commits are not jointly atomic; idempotency is
-            # per PART: each table commits only the buckets it has not
-            # already recorded in a snapshot's meta. A crash between the
-            # three commits — or a resume with a different parts_per_job
-            # chunking — can therefore never double-commit a bucket's
-            # rows for any table.
-            snap = None
-            for name, build in stage_of.items():
-                todo = sorted(set(parts) - _parts_done(tables[name]))
-                if not todo:
-                    continue
-                sub = docs_p.filter(F.col("part").isin(todo))
-                batch = tables[name].stage_batch(build(sub))
-                s = tables[name].commit([batch], {"parts": todo})
-                snap = snap or s
-            snap = snap or "snap-preexisting"
+            parts, started = pending[i:i + chunk], _now()
+            snap = self._commit_unit(
+                tables, docs_p.filter(F.col("part").isin(parts)),
+                media_dim, {"parts": parts},
+                lambda _, todo, snap: lineage_rows(
+                    spark, state.run_id, todo["parts"], snap, started))
             state.commit_parts(parts, snap, started)
-            lineage = spark.createDataFrame(
-                [(state.run_id, p, snap, "committed", started, _now())
-                 for p in parts], LINEAGE_SCHEMA)
-            tables["lineage"].append(lineage)
 
         if not state.global_done:
-            def _stage_done(table, stage):
-                return any(s.get("meta", {}).get("stage") == stage
-                           for s in table.manifest()["snapshots"])
-            if not _stage_done(tables["violations"], "corpus"):
-                corpus = self.corpus_violations(docs_p, media_dim)
-                tables["violations"].append(corpus, {"stage": "corpus"})
-            if not _stage_done(tables["metrics"], "drift"):
+            if _pending(tables["metrics"], {"stage": "drift"}):
                 tables["metrics"].append(
                     self.drift_metrics(docs_p, out_dir), {"stage": "drift"})
             state.mark_global_done()

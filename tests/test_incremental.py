@@ -3,6 +3,7 @@ cross-snapshot uniqueness via the id index, drift vs the first
 snapshot's baseline, idempotent resume per (table, snapshot)."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +63,26 @@ def test_first_snapshot_equals_batch_run(spark, halves, media, tmp_path):
     # first snapshot has nothing earlier to collide with
     v = inc.violations(spark)
     assert v.filter(F.col("message_key") == CROSS_DUP_KEY).count() == 0
+
+    # both paths commit through one core: same violation multiset ...
+    def batch_table(name):
+        return SnapshotTable(*bres["tables"][name].rsplit("/", 1)).read(spark)
+
+    def multiset(df, cols):
+        return Counter(tuple(tuple(x) if isinstance(x, list) else x
+                             for x in r)
+                       for r in df.select(*cols).collect())
+
+    vcols = ("doc_id", "keyword", "ptr", "span_index", "message_key",
+             "part")
+    assert multiset(v, vcols) == multiset(batch_table("violations"), vcols)
+    # ... and the same per-part metrics rows
+    imet = inc.tables["metrics"].read(spark).filter("part >= 0")
+    bmet = batch_table("metrics").filter("part >= 0")
+    mcols = sorted(imet.columns)
+    assert sorted(bmet.columns) == mcols
+    assert imet.count() == 8 * 3
+    assert multiset(imet, mcols) == multiset(bmet, mcols)
 
 
 def test_delta_scans_only_new_batches(spark, halves, media, tmp_path):

@@ -245,6 +245,37 @@ def test_resume_with_different_chunking_no_duplicates(spark, docs, media,
     assert t["lineage"].filter(F.col("snapshot_id").isNull()).count() == 0
 
 
+def test_resume_after_crash_at_lineage_write(spark, docs, media,
+                                             tmp_path):
+    """A crash while a chunk's lineage rows are written must not leave
+    its parts without lineage: the run state records the parts only
+    after lineage committed, so the resume writes the missing rows —
+    once per part, without re-committing the data tables."""
+    import os
+    from unittest import mock
+
+    from jsi_spark.io.tableio import SnapshotTable
+
+    out = str(tmp_path / "out_lineage")
+    orig_append = SnapshotTable.append
+
+    def flaky(self, df, meta=None):
+        if os.path.basename(self.dir) == "lineage":
+            raise RuntimeError("crash at lineage write")
+        return orig_append(self, df, meta)
+
+    with mock.patch.object(SnapshotTable, "append", flaky):
+        with pytest.raises(RuntimeError, match="at lineage write"):
+            ValidationPipeline(n_buckets=8).run(spark, docs, media, out)
+
+    result = ValidationPipeline(n_buckets=8).run(spark, docs, media, out)
+    assert result["completed_parts"] == list(range(8))
+    t = _read_all(spark, result)
+    assert t["lineage"] is not None, "no lineage rows after resume"
+    assert sorted(r.part for r in t["lineage"].collect()) == list(range(8))
+    assert sum(r.docs for r in t["verdicts"].collect()) == N_DOCS
+
+
 def _ops_docs(spark):
     """Small corpus with planted exact dups, a hot stratum, and
     probe-overlapping docs — every standard stage has work to do."""

@@ -8,10 +8,11 @@ index read grows, but it is ids-only — no text — and the join stays
 broadcast/SMJ on longs-and-short-strings).
 
 Method: for each history size H, build a corpus SnapshotTable with a
-history snapshot of H docs, consume it, then append the SAME fixed
+history snapshot of H docs, consume it once, then append the SAME fixed
 DELTA_DOCS-doc delta (disjoint id range) and time ONLY the delta's
-run_once (min of PASSES cold-state repeats, fresh out_dir each, warm
-JVM). Prints one JSON line per H plus a markdown row for SCALE.md.
+run_once (min of PASSES cold-state repeats, each in a fresh out_dir
+copied from the consumed-history state, warm JVM). Prints one JSON
+line per H plus a markdown row for SCALE.md.
 
 Usage: python tools/inc_scale.py [--history 100000,1000000]
                                  [--delta 100000] [--passes 3]
@@ -75,22 +76,25 @@ def main():
         corpus = SnapshotTable(work, "corpus")
         corpus.append(synth_docs(spark, 0, h).coalesce(
             max(1, h // 250_000) * 8))
+        # consume the history once into a state dir (untimed)
+        state0 = os.path.join(work, "state0")
+        IncrementalValidator(corpus, state0, pipeline=pipe).run_once(
+            spark, media)
         # delta ids start beyond every history range; 1-in-1000 rows
         # collide back into history (the cross-snapshot check must do
         # real work, not exit on an empty join)
         sid = corpus.append(synth_docs(spark, 10_000_000_000, args.delta,
                                        dup_every=1000).coalesce(8))
-        hist_snap, delta_snap = corpus.manifest()["snapshots"]
         best = None
         for _ in range(args.passes):
-            # fresh output state per pass: the delta is validated from
-            # cold every time (no output caches), against a fully
-            # consumed history
+            # fresh output state per pass, copied from the consumed
+            # history: the delta is validated from cold every time (no
+            # output caches) and is the only pending snapshot
             out = os.path.join(work, f"out_{time.time_ns()}")
+            shutil.copytree(state0, out)
             inc = IncrementalValidator(corpus, out, pipeline=pipe)
-            inc._process(spark, hist_snap, media)  # consume (untimed)
             t0 = time.time()
-            inc._process(spark, delta_snap, media)  # the measured delta
+            inc.run_once(spark, media)  # the measured delta
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
             ndup = (inc.violations(spark, source_snapshot=sid)
