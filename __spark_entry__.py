@@ -579,7 +579,7 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: session-scoped memo of the MinHash near-dup pairs frame, keyed by
-#: (SparkContext, sf_dir). Three queries consume the identical pipeline
+#: (applicationId, sf_dir). Three queries consume the identical pipeline
 #: (minhash_near_dups, dedup_clusters, dedup_clusters_star); computing
 #: it once and persisting the tiny (id_a, id_b, jaccard) result is the
 #: production pattern (materialize the candidate-pair table, then run
@@ -590,7 +590,7 @@ _PAIRS_MEMO: dict = {}
 
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark.sparkContext), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     hit = _PAIRS_MEMO.get(key)
     if hit is not None:
         return hit
@@ -1151,7 +1151,7 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _INC_PIPELINE = None
-#: (sparkContext id, sf_dir) -> temp dir holding the built 2-append
+#: (applicationId, sf_dir) -> temp dir holding the built 2-append
 #: SnapshotTable harness corpus for q_incremental_uniqueness
 _INC_CORPUS_MEMO: dict = {}
 
@@ -1204,7 +1204,7 @@ def q_incremental_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state makes it process exactly the pending delta.
     import shutil
 
-    key = (id(spark.sparkContext), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     memo = _INC_CORPUS_MEMO.get(key)
     if memo is None:
         work = tempfile.mkdtemp(prefix="jsi_inc_")

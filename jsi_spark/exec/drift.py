@@ -1,7 +1,8 @@
 """Distribution drift: approximate quantile sketches + population
 stability index (north_rule "KLL quantile sketches for drift via
-population-stability-index"; KLL background per PAPERS.md — Spark's
-``percentile_approx`` is the built-in mergeable quantile sketch).
+population-stability-index"; KLL background per PAPERS.md). The
+quantiles come from Spark's ``percentile_approx``, a mergeable
+Greenwald–Khanna-style summary — not a KLL sketch.
 
 PSI = Σ (p_i − q_i) · ln(p_i / q_i) over shared bins, where q is the
 reference (baseline snapshot) distribution and p the current one.

@@ -17,7 +17,9 @@ changed is re-examined).
   O(delta), not O(corpus).
 - **Cross-snapshot uniqueness via a compact id-index table** holding
   (doc_id, part) for every consumed doc: the delta semi-joins the
-  index. The index is ~1-2% of corpus bytes (no text). In production
+  index. The index is ~1-2% of corpus bytes (no text), and it is read
+  with its fixed schema: no footer-inference job, whatever its batch
+  count. In production
   both sides are bucketed by doc_id so the join is a shuffle-free
   sort-merge; here Spark picks broadcast/SMJ by size. Intra-delta
   duplicates use the same salted two-phase agg as the batch pass.
@@ -27,15 +29,19 @@ changed is re-examined).
   (drift_baseline.json, written by the earliest run): each delta's
   n_spans distribution gets a PSI against it — exactly the "is today's
   append shaped like the corpus start" question drift monitoring asks.
+  The drift row is its own concurrent task in the commit unit.
 - **Idempotent per (output table, input snapshot).** Each snapshot is
   one unit of the batch pipeline's commit core
   (``ValidationPipeline._commit_unit``): its checked rows are persisted
-  once (the cache is bounded by the append, not the corpus), the audit
-  tables are written concurrently, and each append carries meta
-  {"source_snapshot": sid}. A crashed run re-runs only the
-  table×snapshot cells that never committed, so restarts never
-  double-append. The id-index append is LAST — a snapshot counts as
-  consumed only once its ids are indexed.
+  once (the cache is bounded by the append, not the corpus), and each
+  append carries meta {"source_snapshot": sid}. Violations and the id
+  index are the only Spark writes, staged concurrently; verdicts,
+  metrics (+ the drift row) and lineage are driver-sized pyarrow
+  writes. A crashed run re-runs only the table×snapshot cells that
+  never committed, so restarts never double-append. The id-index
+  COMMIT is last — a snapshot counts as consumed only once its ids are
+  committed to the index; a batch staged before a crash stays an
+  orphan that no manifest lists.
 """
 
 from __future__ import annotations
@@ -45,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jsi_spark.exec.verdicts import with_part
 from jsi_spark.io.checkpoint import _now
 from jsi_spark.io.tableio import SnapshotTable
 from jsi_spark.pipeline import ValidationPipeline, lineage_rows
@@ -52,6 +59,9 @@ from jsi_spark.pipeline import ValidationPipeline, lineage_rows
 CROSS_DUP_KEY = "validation.corpus.duplicate_doc_id.cross_snapshot"
 
 OUT_TABLES = ("violations", "verdicts", "metrics", "lineage", "id_index")
+
+#: the id index's fixed schema: read with it, no footer inference runs
+ID_INDEX_DDL = "doc_id string, part int"
 
 
 class IncrementalValidator:
@@ -107,7 +117,7 @@ class IncrementalValidator:
             F.lit("/doc_id").alias("ptr"),
             F.lit(None).cast("int").alias("span_index"),
             F.lit(CROSS_DUP_KEY).alias("message_key"), "part")
-        idx = self.tables["id_index"].read(spark)
+        idx = self.tables["id_index"].read(spark, schema=ID_INDEX_DDL)
         if idx is None:  # first snapshot: nothing to collide with
             return dups.limit(0)
         return dups.join(idx.select("doc_id"), "doc_id", "left_semi")
@@ -121,18 +131,22 @@ class IncrementalValidator:
         vp, consumed = self.pipeline, []
         for snap in self.pending():
             sid, started = snap["snapshot_id"], _now()
+            src = self._snapshot_df(spark, snap)
             vp._commit_unit(
-                self.tables, vp.checked(self._snapshot_df(spark, snap)),
-                media_dim, {"source_snapshot": sid},
-                lambda rows, *_: rows.select("doc_id", "part"),
+                self.tables, vp.checked(src), media_dim,
+                {"source_snapshot": sid},
+                lambda *_: lineage_rows(f"inc-{sid}", range(vp.n_buckets),
+                                        sid, started),
                 add={
                     "violations": lambda rows: self.cross_snapshot_dups(
                         rows, spark),
-                    "metrics": lambda rows: vp.drift_metrics(
-                        rows, self.out_dir),
-                    "lineage": lambda _: lineage_rows(
-                        spark, f"inc-{sid}", range(vp.n_buckets), sid,
-                        started),
+                    "metrics": lambda rows: [vp.drift_row(
+                        rows, self.out_dir)],
+                    # from the source's doc_id column, not the checked
+                    # rows: the index needs no validation, so its write
+                    # does not wait for the persisted rows
+                    "id_index": lambda _: with_part(
+                        src.select("doc_id"), vp.n_buckets),
                 })
             consumed.append(sid)
         return {"consumed": consumed,

@@ -16,6 +16,8 @@ import os
 import time
 import uuid
 
+from jsi_spark.io.tableio import atomic_write_json
+
 
 class RunState:
     def __init__(self, out_dir: str, run_id: str | None = None):
@@ -35,10 +37,7 @@ class RunState:
             return json.load(f)
 
     def _save(self, state) -> None:
-        tmp = self.path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1)
-        os.replace(tmp, self.path)
+        atomic_write_json(self.path, state, indent=1)
 
     @property
     def run_id(self) -> str:

@@ -10,6 +10,13 @@ one small interface:
 - a failed job leaves orphan batch dirs that no manifest references:
   harmless, cleaned lazily.
 
+A batch is written either by Spark (:meth:`SnapshotTable.stage_batch`,
+data-sized frames) or by pyarrow (:meth:`SnapshotTable.stage_arrow`,
+driver-sized tables of a few dozen rows, ~1 ms instead of a Spark
+job). Both go through the same manifest commit, and :func:`arrow_table`
+types the pyarrow rows from the same Spark DDL, so mixed batches read
+back as one table.
+
 On a real cluster this class is swapped for Iceberg catalog tables
 (``spark.read.format("iceberg")``); everything above this interface is
 unchanged.
@@ -21,8 +28,43 @@ import json
 import os
 import time
 import uuid
+from functools import lru_cache
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
+
+
+def atomic_write_json(path: str, obj, indent: int | None = None) -> None:
+    """Write ``obj`` as JSON to ``path`` all-or-nothing: a tmp file
+    renamed into place, so a crash mid-dump leaves the old file (or
+    none), never a torn one."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=indent)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+@lru_cache(maxsize=None)
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The pyarrow schema of a Spark DDL string (needs an active
+    session: Spark parses the DDL)."""
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def arrow_table(rows, ddl: str) -> pa.Table:
+    """Driver-side rows (tuples in DDL column order) as a pyarrow table
+    typed like the Spark DDL — a pyarrow batch reads back with the same
+    types as a Spark batch of that DDL."""
+    schema = arrow_schema(ddl)
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                schema=schema)
 
 
 def parquet_num_rows(path: str) -> int:
@@ -54,10 +96,7 @@ class SnapshotTable:
             return json.load(f)
 
     def _write_manifest(self, m: dict) -> None:
-        tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self.manifest_path)  # atomic commit
+        atomic_write_json(self.manifest_path, m, indent=1)  # the commit
 
     def committed_batches(self) -> list[str]:
         out: list[str] = []
@@ -69,10 +108,23 @@ class SnapshotTable:
 
     # -- write (staged) / commit ----------------------------------------------
 
+    @staticmethod
+    def _new_batch() -> str:
+        return f"batch-{uuid.uuid4().hex[:12]}"
+
     def stage_batch(self, df: DataFrame) -> str:
-        """Write a new batch dir; NOT visible until commit()."""
-        batch = f"batch-{uuid.uuid4().hex[:12]}"
+        """Write a new batch dir with Spark; NOT visible until commit()."""
+        batch = self._new_batch()
         df.write.mode("overwrite").parquet(os.path.join(self.dir, batch))
+        return batch
+
+    def stage_arrow(self, table: pa.Table) -> str:
+        """Write a new batch dir holding ``table`` as one parquet file
+        (driver-side, no Spark job); NOT visible until commit()."""
+        batch = self._new_batch()
+        os.makedirs(os.path.join(self.dir, batch))
+        pq.write_table(table, os.path.join(self.dir, batch,
+                                           "part-00000.parquet"))
         return batch
 
     def commit(self, batches: list[str], meta: dict | None = None) -> str:
@@ -88,13 +140,19 @@ class SnapshotTable:
         self._write_manifest(m)
         return snapshot_id
 
-    def append(self, df: DataFrame, meta: dict | None = None) -> str:
-        return self.commit([self.stage_batch(df)], meta)
+    def append(self, data: DataFrame | pa.Table,
+               meta: dict | None = None) -> str:
+        """Stage ``data`` (a Spark DataFrame, or a driver-sized pyarrow
+        table) as one batch and commit it."""
+        if isinstance(data, pa.Table):
+            return self.commit([self.stage_arrow(data)], meta)
+        return self.commit([self.stage_batch(data)], meta)
 
     # -- read -----------------------------------------------------------------
 
     def read(self, spark: SparkSession, as_of: str | None = None,
-             merge_schema: bool = True) -> DataFrame | None:
+             merge_schema: bool = True,
+             schema: str | None = None) -> DataFrame | None:
         """Committed rows; ``as_of`` reads the table AS OF that
         snapshot id (inclusive) — Iceberg time travel (`VERSION AS OF`)
         over the manifest's snapshot log.
@@ -105,7 +163,12 @@ class SnapshotTable:
         Iceberg's add-column semantics. Without it Spark silently takes
         the first file's schema and drops the new column. (Iceberg
         tracks the schema in table metadata instead of footers; this
-        layer pays the footer union, which is what the sandbox has.)"""
+        layer pays the footer union, which is what the sandbox has.)
+
+        ``schema`` (a DDL string) fixes the read schema instead: no
+        footer is read at planning time, so a table that gains a batch
+        per append does not pay a schema-inference job that grows with
+        its batch count."""
         batches = []
         for s in self.manifest()["snapshots"]:
             if s.get("meta", {}).get("operation") == "replace":
@@ -119,7 +182,9 @@ class SnapshotTable:
         if not batches:
             return None
         reader = spark.read
-        if merge_schema:
+        if schema is not None:
+            reader = reader.schema(schema)
+        elif merge_schema:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(
             *[os.path.join(self.dir, b) for b in batches])

@@ -9,10 +9,18 @@ Batch runs and incremental appends commit through one core,
 :meth:`ValidationPipeline._commit_unit`, with no global corpus stage:
 ``part`` hashes doc_id, so every copy of a doc_id shares a bucket and
 uniqueness is exact per chunk of buckets. The only shuffles are (1)
-per-part verdict/metric hash aggs (tiny), (2) the salted uniqueness agg,
+ONE per-part aggregate per unit (verdict counts + column stats, a few
+dozen rows collected to the driver), (2) the salted uniqueness agg,
 (3) the referential anti-join (map-side when the dim broadcasts).
 Violations expand on FAILING rows only — the Result::Valid/Result::Full
 two-pass split (lib/jsi/validation/result.rb:185-199) done with a filter.
+
+Only data-sized tables are written by Spark: violations and the
+incremental id index. Verdicts, metrics, lineage and the drift row are
+driver-sized (one row per part, or one per run) and are written with
+pyarrow through the same snapshot commit. The corpus-wide drift row of
+a batch run is computed concurrently with the chunks and commits after
+the last one.
 """
 
 from __future__ import annotations
@@ -22,7 +30,6 @@ import math
 import os
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,18 +39,28 @@ from jsi_spark.compile.compiler import CompiledSchema, compile_schema
 from jsi_spark.exec.columnar import TypedValidator
 from jsi_spark.exec.drift import EPS, bin_column, quantile_edges
 from jsi_spark.exec.referential import referential_violations
-from jsi_spark.exec.stats import column_stats
+from jsi_spark.exec.stats import column_stats, stats_aggs, unpivot_row
 from jsi_spark.exec.uniqueness import uniqueness_violations
-from jsi_spark.exec.verdicts import partition_verdicts, with_part
+from jsi_spark.exec.verdicts import with_part
 from jsi_spark.io.checkpoint import RunState, _now
-from jsi_spark.io.tableio import SnapshotTable
+from jsi_spark.io.tableio import (SnapshotTable, arrow_table,
+                                  atomic_write_json)
 from jsi_spark.plans.docs_schema import DOCS_JSON_SCHEMA, DOCS_SCHEMA
 
 VIOLATION_OUT_COLS = ("doc_id", "keyword", "ptr", "span_index",
                       "message_key", "part")
 
-LINEAGE_SCHEMA = ("run_id string, part int, snapshot_id string, "
-                  "status string, started_at string, finished_at string")
+#: schemas of the driver-sized tables (pyarrow-written, Spark-typed)
+DRIVER_DDL = {
+    "verdicts": "part int, docs long, passed long, failed long, "
+                "pass boolean",
+    "metrics": "part int, column string, n_rows long, null_count long, "
+               "distinct_hll long, min_val string, max_val string, "
+               "kll_quantiles array<double>, psi double",
+    "lineage": "run_id string, part int, snapshot_id string, "
+               "status string, started_at string, finished_at string",
+}
+METRIC_COLS = ["doc_id", "n_spans", "valid_l"]
 
 
 def _parts_done(table: SnapshotTable) -> set[int]:
@@ -64,11 +81,10 @@ def _pending(table: SnapshotTable, key: dict) -> dict | None:
     return None if any(key.items() <= m.items() for m in metas) else key
 
 
-def lineage_rows(spark: SparkSession, run_id: str, parts,
-                 snapshot_id: str, started: str) -> DataFrame:
-    return spark.createDataFrame(
-        [(run_id, p, snapshot_id, "committed", started, _now())
-         for p in parts], LINEAGE_SCHEMA)
+def lineage_rows(run_id: str, parts, snapshot_id: str,
+                 started: str) -> list[tuple]:
+    return [(run_id, p, snapshot_id, "committed", started, _now())
+            for p in parts]
 
 
 class ValidationPipeline:
@@ -103,14 +119,37 @@ class ValidationPipeline:
                         F.col("v.message_key").alias("message_key"),
                         "part"))
 
-    def metrics(self, checked: DataFrame) -> DataFrame:
-        flat = checked.select(
+    @staticmethod
+    def _flat(checked: DataFrame) -> DataFrame:
+        return checked.select(
             "part", "doc_id",
             F.size("spans").alias("n_spans"),
             F.col("valid").cast("long").alias("valid_l"))
-        return (column_stats(flat, ["doc_id", "n_spans", "valid_l"],
+
+    def metrics(self, checked: DataFrame) -> DataFrame:
+        return (column_stats(self._flat(checked), METRIC_COLS,
                              group_by="part")
                 .withColumn("psi", F.lit(None).cast("double")))
+
+    def part_stats(self, checked: DataFrame) -> dict[str, list]:
+        """Verdict rows and metric rows (by table name) of every part in
+        ``checked``, from ONE ``groupBy(part)`` aggregate collected to the
+        driver:
+        the :meth:`metrics` column stats plus the verdict sums of
+        :func:`jsi_spark.exec.verdicts.partition_verdicts`. Rows are
+        tuples in :data:`DRIVER_DDL` column order."""
+        flat = self._flat(checked)
+        cols, aggs = stats_aggs(flat, METRIC_COLS)
+        wide = flat.groupBy("part").agg(
+            *aggs, F.sum("valid_l").alias("__passed"),
+            F.sum(1 - F.col("valid_l")).alias("__failed")).collect()
+        return {
+            "verdicts": [(r.part, r["__n_rows"], r["__passed"],
+                          r["__failed"], None if r["__failed"] is None
+                          else r["__failed"] == 0) for r in wide],
+            "metrics": [(r.part, *stat, None)
+                        for r in wide for stat in unpivot_row(r, cols)],
+        }
 
     def corpus_violations(self, checked: DataFrame,
                           media_dim: DataFrame) -> DataFrame:
@@ -122,11 +161,12 @@ class ValidationPipeline:
         return with_part(uniq.unionByName(ref),
                          self.n_buckets).select(*VIOLATION_OUT_COLS)
 
-    def drift_metrics(self, docs_p: DataFrame, out_dir: str) -> DataFrame:
-        """PSI of the n_spans distribution vs the first run's baseline
-        snapshot (stored beside the tables). First run: PSI = 0.0 by
-        construction and the baseline is persisted."""
-        spark = docs_p.sparkSession
+    def drift_row(self, docs_p: DataFrame, out_dir: str) -> tuple:
+        """The metrics-table row holding the PSI of the n_spans
+        distribution vs the first run's baseline snapshot (stored beside
+        the tables). First run: PSI = 0.0 by construction and the
+        baseline is persisted (atomically: a crash mid-write leaves no
+        baseline, and the next run writes it)."""
         flat = docs_p.select(F.size("spans").cast("double").alias("x"))
         baseline_path = os.path.join(out_dir, "drift_baseline.json")
         if os.path.exists(baseline_path):
@@ -143,42 +183,42 @@ class ValidationPipeline:
         cur = [shares.get(i, 0.0) for i in range(-1, len(edges) + 1)]
         if ref_shares is None:
             ref_shares = cur
-            with open(baseline_path, "w") as f:
-                json.dump({"edges": edges, "shares": cur}, f)
+            atomic_write_json(baseline_path, {"edges": edges, "shares": cur})
         psi_val = sum((p - q) * math.log((p + EPS) / (q + EPS))
                       for p, q in zip(cur, ref_shares))
-        return spark.createDataFrame(
-            [(-1, "n_spans_psi", None, None, None, None, None, None,
-              float(psi_val))],
-            "part int, column string, n_rows long, null_count long, "
-            "distinct_hll long, min_val string, max_val string, "
-            "kll_quantiles array<double>, psi double")
+        return (-1, "n_spans_psi", None, None, None, None, None, None,
+                float(psi_val))
+
+    def drift_metrics(self, docs_p: DataFrame, out_dir: str) -> DataFrame:
+        """:meth:`drift_row` as a one-row metrics DataFrame."""
+        return docs_p.sparkSession.createDataFrame(
+            [self.drift_row(docs_p, out_dir)], DRIVER_DDL["metrics"])
 
     # -- orchestration --------------------------------------------------------------
 
     def _commit_unit(self, tables: dict[str, SnapshotTable],
                      rows: DataFrame, media_dim: DataFrame, key: dict,
-                     marker: Callable, add: dict | None = None) -> str:
+                     lineage, add: dict | None = None) -> str:
         """Commit one unit of work — the checked ``rows`` of a chunk of
         part buckets (key ``{"parts": [...]}``) or of one source snapshot
         (key ``{"source_snapshot": sid}``) — and return the first snapshot
         it committed ("snap-preexisting" if none).
 
-        The rows are persisted once. Violations (keyword ∪ uniqueness ∪
-        referential), verdicts, per-part metrics and whatever ``add``
-        builds per table are written concurrently (the block manager
-        computes each persisted partition once across the jobs). The
-        last of ``tables`` is the caller's marker, ``marker(rows, key,
-        snap)``, committed after all others. A table that recorded the
-        key, or some of a chunk's parts, commits only the rest: neither
-        a crash between commits nor a rechunked resume commits a row
-        twice."""
-        core = {
-            "violations": lambda r: self.local_violations(r).unionByName(
-                self.corpus_violations(r, media_dim)),
-            "verdicts": partition_verdicts,
-            "metrics": self.metrics,
-        }
+        The rows are persisted once. Concurrently, as pool tasks: each
+        data-sized table (any not in :data:`DRIVER_DDL`) stages one
+        Spark batch — violations are keyword ∪ uniqueness ∪ referential
+        ∪ ``add["violations"](rows)``, another table (the id index) is
+        ``add[name](rows)`` alone; one :meth:`part_stats` aggregate is
+        collected; and each driver-sized ``add`` callable returns extra
+        rows for its table (an append's drift row). Tables then commit
+        in order; verdicts, metrics and ``lineage(todo, snap)`` rows are
+        written with pyarrow as they commit (~1 ms each: lineage rows
+        carry the unit's first snapshot id, so they are built once the
+        data tables committed). The last of ``tables`` is the caller's
+        marker (lineage for batch, the id index for appends), committed
+        after all others. A table that recorded the key, or some of a
+        chunk's parts, commits only the rest: neither a crash between
+        commits nor a rechunked resume commits a row twice."""
         add = add or {}
         *data, last = tables
         todo = {name: _pending(tables[name], key) for name in tables}
@@ -187,21 +227,53 @@ class ValidationPipeline:
             return (rows if part_key == key else
                     rows.filter(F.col("part").isin(part_key["parts"])))
 
-        def write(name):
+        core = {"violations": lambda r: self.local_violations(r)
+                .unionByName(self.corpus_violations(r, media_dim))}
+
+        def stage(name):
             r = rows_for(todo[name])
-            out = reduce(DataFrame.unionByName,
-                         [f(r) for f in (core.get(name), add.get(name)) if f])
-            return tables[name].append(out, todo[name])
+            return tables[name].stage_batch(reduce(
+                DataFrame.unionByName,
+                [f(r) for f in (core.get(name), add.get(name)) if f]))
 
         rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            with ThreadPoolExecutor(max_workers=len(data)) as pool:
-                futs = [pool.submit(write, n) for n in data if todo[n]]
-                snaps = [f.result() for f in futs]
-            snap = snaps[0] if snaps else "snap-preexisting"
-            if todo[last]:
-                tables[last].append(
-                    marker(rows_for(todo[last]), todo[last], snap), todo[last])
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                staged = {n: pool.submit(stage, n) for n in tables
+                          if n not in DRIVER_DDL and todo[n]}
+                stats = (pool.submit(self.part_stats, rows)
+                         if todo["verdicts"] or todo["metrics"] else None)
+                extra = {n: pool.submit(f, rows_for(todo[n]))
+                         for n, f in add.items()
+                         if n in DRIVER_DDL and todo[n]}
+                snaps: list[str] = []
+
+                def first_snap():
+                    return snaps[0] if snaps else "snap-preexisting"
+
+                def driver_rows(name):
+                    if name == "lineage":
+                        return lineage(todo[name], first_snap())
+                    got = stats.result()[name]
+                    if todo[name] != key:
+                        got = [r for r in got if r[0] in todo[name]["parts"]]
+                    return got + (extra[name].result() if name in extra
+                                  else [])
+
+                def commit(name):
+                    if name in staged:
+                        return tables[name].commit(
+                            [staged[name].result()], todo[name])
+                    return tables[name].append(
+                        arrow_table(driver_rows(name), DRIVER_DDL[name]),
+                        todo[name])
+
+                for name in data:
+                    if todo[name]:
+                        snaps.append(commit(name))
+                snap = first_snap()
+                if todo[last]:
+                    commit(last)
             return snap
         finally:
             rows.unpersist()
@@ -215,32 +287,38 @@ class ValidationPipeline:
         in one job — fewer, bigger jobs; tests use small values to
         exercise resume). ``fail_after_jobs`` simulates a crash for the
         kill/restart test. Each chunk's lineage commits last, before the
-        run state records its parts; the corpus-wide drift row commits
-        after every chunk."""
+        run state records its parts. The corpus-wide drift row is
+        computed concurrently with the chunks and commits after the
+        last one."""
         state = RunState(out_dir)
         tables = {name: SnapshotTable(out_dir, name)
                   for name in ("violations", "verdicts", "metrics",
                                "lineage")}
         docs_p = self.checked(docs)
+        drift_key = {"stage": "drift"}
 
         pending = sorted(set(range(self.n_buckets)) -
                          state.completed_parts())
         chunk = parts_per_job or max(len(pending), 1)
-        for j, i in enumerate(range(0, len(pending), chunk)):
-            if fail_after_jobs is not None and j >= fail_after_jobs:
-                raise RuntimeError("simulated crash for resume test")
-            parts, started = pending[i:i + chunk], _now()
-            snap = self._commit_unit(
-                tables, docs_p.filter(F.col("part").isin(parts)),
-                media_dim, {"parts": parts},
-                lambda _, todo, snap: lineage_rows(
-                    spark, state.run_id, todo["parts"], snap, started))
-            state.commit_parts(parts, snap, started)
-
-        if not state.global_done:
-            if _pending(tables["metrics"], {"stage": "drift"}):
+        with ThreadPoolExecutor(max_workers=1) as bg:
+            drift = (bg.submit(self.drift_row, docs_p, out_dir)
+                     if not state.global_done
+                     and _pending(tables["metrics"], drift_key) else None)
+            for j, i in enumerate(range(0, len(pending), chunk)):
+                if fail_after_jobs is not None and j >= fail_after_jobs:
+                    raise RuntimeError("simulated crash for resume test")
+                parts, started = pending[i:i + chunk], _now()
+                snap = self._commit_unit(
+                    tables, docs_p.filter(F.col("part").isin(parts)),
+                    media_dim, {"parts": parts},
+                    lambda todo, snap: lineage_rows(
+                        state.run_id, todo["parts"], snap, started))
+                state.commit_parts(parts, snap, started)
+            if drift is not None:
                 tables["metrics"].append(
-                    self.drift_metrics(docs_p, out_dir), {"stage": "drift"})
+                    arrow_table([drift.result()], DRIVER_DDL["metrics"]),
+                    drift_key)
+        if not state.global_done:
             state.mark_global_done()
 
         return {

@@ -12,7 +12,9 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_PY_FILES_SENT: set[int] = set()
+#: applications the package was shipped to, by ``applicationId`` (an
+#: ``id(sparkContext)`` can be reused by a context created after a stop)
+_PY_FILES_SENT: set[str] = set()
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -24,7 +26,7 @@ def ensure_py_files(spark: SparkSession) -> None:
     root: cloudpickle serializes those closures by reference, so the
     worker must be able to ``import jsi_spark``. Idempotent per session.
     """
-    key = id(spark.sparkContext)
+    key = spark.sparkContext.applicationId
     if key in _PY_FILES_SENT:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))

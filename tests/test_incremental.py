@@ -233,3 +233,98 @@ def test_evolved_delta_still_validates(spark, halves, media, tmp_path):
     mv = inc.merged_verdicts(spark)
     assert sum(r.docs for r in mv.collect()) == a.count() + b.count()
     assert "pipeline_tag" not in inc.violations(spark).columns
+
+
+def _table_rows(inc, spark, name, cols=None):
+    df = inc.tables[name].read(spark)
+    return Counter(tuple(tuple(x) if isinstance(x, list) else x for x in r)
+                   for r in (df.select(*cols) if cols else df).collect())
+
+
+def _assert_equal_outputs(spark, got, clean,
+                          lineage_cols=("run_id", "part", "snapshot_id")):
+    """Row multisets equal per table (metrics on their exact columns,
+    lineage without timestamps)."""
+    exact = ("part", "column", "n_rows", "null_count", "min_val", "max_val",
+             "psi")
+    for name, cols in (("violations", None), ("verdicts", None),
+                       ("metrics", exact), ("id_index", None),
+                       ("lineage", lineage_cols)):
+        assert (_table_rows(got, spark, name, cols)
+                == _table_rows(clean, spark, name, cols)), name
+
+
+@pytest.mark.parametrize("table", ["verdicts", "metrics"])
+def test_resume_after_crash_at_driver_table_write(spark, halves, media,
+                                                  tmp_path, table):
+    """A crash at the pyarrow verdicts or metrics write leaves the
+    snapshot unconsumed; the retry commits the missing tables once and
+    the outputs equal a clean run's."""
+    from unittest import mock
+
+    a, _ = halves
+    orig_append = SnapshotTable.append
+
+    def flaky(self, data, meta=None):
+        if os.path.basename(self.dir) == table:
+            raise RuntimeError(f"crash at {table} write")
+        return orig_append(self, data, meta)
+
+    corpus = _corpus(tmp_path, a)
+    inc = IncrementalValidator(corpus, str(tmp_path / "out"), n_buckets=8)
+    with mock.patch.object(SnapshotTable, "append", flaky):
+        with pytest.raises(RuntimeError, match=f"at {table} write"):
+            inc.run_once(spark, media)
+    assert inc.consumed() == set()
+    assert len(inc.run_once(spark, media)["consumed"]) == 1
+
+    clean = IncrementalValidator(corpus, str(tmp_path / "clean"),
+                                 n_buckets=8)
+    clean.run_once(spark, media)
+    _assert_equal_outputs(spark, inc, clean)
+
+
+def test_resume_after_crash_between_id_index_stage_and_commit(
+        spark, halves, media, tmp_path):
+    """The id-index batch is staged concurrently with the data tables
+    and only its manifest commit runs last. A crash between the two
+    leaves the snapshot unconsumed and an orphan staged batch; the
+    retry indexes every id once, the orphan never enters the manifest,
+    and vacuum() removes it."""
+    from unittest import mock
+
+    a, b = halves
+    corpus = _corpus(tmp_path, a)
+    out = str(tmp_path / "out")
+    inc = IncrementalValidator(corpus, out, n_buckets=8)
+    inc.run_once(spark, media)
+    corpus.append(b)
+    orig_commit = SnapshotTable.commit
+
+    def flaky(self, batches, meta=None):
+        if os.path.basename(self.dir) == "id_index":
+            raise RuntimeError("crash before id-index commit")
+        return orig_commit(self, batches, meta)
+
+    with mock.patch.object(SnapshotTable, "commit", flaky):
+        with pytest.raises(RuntimeError, match="before id-index commit"):
+            inc.run_once(spark, media)
+    index = inc.tables["id_index"]
+    orphans = [e for e in os.listdir(index.dir) if e.startswith("batch-")
+               and e not in index.committed_batches()]
+    assert len(orphans) == 1
+    assert len(inc.pending()) == 1
+
+    assert len(inc.run_once(spark, media)["consumed"]) == 1
+    assert not set(orphans) & set(index.committed_batches())
+    n_docs = a.count() + b.count()
+    assert index.read(spark).count() == n_docs, "ids indexed twice"
+    assert index.vacuum() == orphans
+    assert index.read(spark).count() == n_docs
+
+    clean = IncrementalValidator(_corpus(tmp_path / "c", a, b),
+                                 str(tmp_path / "clean"), n_buckets=8)
+    clean.run_once(spark, media)
+    # the source snapshot ids differ between the two corpora, so the
+    # lineage compare is on its parts
+    _assert_equal_outputs(spark, inc, clean, lineage_cols=("part",))

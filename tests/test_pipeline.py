@@ -473,3 +473,128 @@ def test_semantic_dedup_stage_drops_planted_twins(spark, tmp_path):
            SnapshotTable(root, table).read(spark).collect()}
     assert not ids & {20 + i for i in range(5)}, "twins dropped"
     assert {i for i in range(5)} <= ids, "originals kept"
+
+
+def _exact_metrics(df):
+    return df.select("part", "column", "n_rows", "null_count", "min_val",
+                     "max_val")
+
+
+@pytest.mark.parametrize("table", ["verdicts", "metrics"])
+def test_resume_after_crash_at_driver_table_write(spark, docs, media,
+                                                  tmp_path, table):
+    """A crash at a pyarrow-written table's append (verdicts, metrics)
+    resumes to the tables of a clean run, also when the resume chunks
+    the parts differently: the tables that committed a part before the
+    crash do not commit it again (the driver-side rows of a chunk are
+    cut to the parts each table still lacks)."""
+    import os
+    from unittest import mock
+
+    from jsi_spark.io.tableio import SnapshotTable
+
+    out = str(tmp_path / f"out_{table}")
+    orig_append = SnapshotTable.append
+
+    def flaky(self, data, meta=None):
+        if os.path.basename(self.dir) == table:
+            raise RuntimeError(f"crash at {table} write")
+        return orig_append(self, data, meta)
+
+    with mock.patch.object(SnapshotTable, "append", flaky):
+        with pytest.raises(RuntimeError, match=f"at {table} write"):
+            ValidationPipeline(n_buckets=8).run(spark, docs, media, out,
+                                                parts_per_job=3)
+
+    result = ValidationPipeline(n_buckets=8).run(spark, docs, media, out,
+                                                 parts_per_job=4)
+    assert result["completed_parts"] == list(range(8))
+    t = _read_all(spark, result)
+    tc = _read_all(spark, ValidationPipeline(n_buckets=8).run(
+        spark, docs, media, str(tmp_path / f"clean_{table}")))
+    for name, cut in (("violations", lambda d: d), ("verdicts", lambda d: d),
+                      ("metrics", _exact_metrics)):
+        a, b = cut(t[name]), cut(tc[name])
+        assert a.count() == b.count(), name
+        assert a.exceptAll(b).count() == 0, f"{name}: extra rows"
+    assert sorted(r.part for r in t["lineage"].collect()) == list(range(8))
+
+
+def test_drift_baseline_write_is_atomic(spark, docs, media, tmp_path):
+    """A crash mid-dump of drift_baseline.json leaves no baseline (or
+    the old one), never a torn file, and the next run succeeds."""
+    import json
+    import os
+    from unittest import mock
+
+    from jsi_spark.io import tableio
+
+    out = str(tmp_path / "out_baseline")
+    baseline = os.path.join(out, "drift_baseline.json")
+    orig_dump = json.dump
+
+    def torn(obj, f, **kw):
+        if isinstance(obj, dict) and "edges" in obj:
+            f.write('{"edges": [0.5, ')
+            raise OSError("disk full mid-dump")
+        return orig_dump(obj, f, **kw)
+
+    with mock.patch.object(tableio.json, "dump", torn):
+        with pytest.raises(OSError, match="mid-dump"):
+            ValidationPipeline(n_buckets=8).run(spark, docs, media, out)
+    assert not os.path.exists(baseline)
+    assert not [f for f in os.listdir(out) if ".tmp." in f]
+
+    result = ValidationPipeline(n_buckets=8).run(spark, docs, media, out)
+    with open(baseline) as f:
+        written = json.load(f)
+    drift = _read_all(spark, result)["metrics"].filter(
+        F.col("part") == -1).collect()
+    assert len(drift) == 1
+    assert drift[0].psi == pytest.approx(0.0, abs=1e-9)
+
+    # an existing file survives a torn rewrite untouched
+    with mock.patch.object(tableio.json, "dump", torn):
+        with pytest.raises(OSError, match="mid-dump"):
+            tableio.atomic_write_json(baseline, {"edges": [], "shares": []})
+    with open(baseline) as f:
+        assert json.load(f) == written
+
+
+def test_mixed_writer_batches_read_back_with_spark_types(spark, docs,
+                                                         tmp_path):
+    """One table holding a Spark-written batch and a pyarrow-written
+    batch of the same DDL (a resumed output dir written before the
+    driver-sized tables moved to pyarrow) reads back through
+    SnapshotTable.read with the Spark DDL types."""
+    from jsi_spark.exec.verdicts import partition_verdicts
+    from jsi_spark.io.tableio import SnapshotTable, arrow_table
+    from jsi_spark.pipeline import DRIVER_DDL
+
+    pipe = ValidationPipeline(n_buckets=4)
+    checked = pipe.checked(docs)
+    rows = pipe.part_stats(checked)
+    want = {
+        "verdicts": {"part": "int", "docs": "bigint", "passed": "bigint",
+                     "failed": "bigint", "pass": "boolean"},
+        "metrics": {"part": "int", "column": "string", "n_rows": "bigint",
+                    "null_count": "bigint", "distinct_hll": "bigint",
+                    "min_val": "string", "max_val": "string",
+                    "kll_quantiles": "array<double>", "psi": "double"},
+    }
+    spark_written = {"verdicts": partition_verdicts(checked),
+                     "metrics": pipe.metrics(checked)}
+    for name, types in want.items():
+        t = SnapshotTable(str(tmp_path), name)
+        t.append(spark_written[name])
+        t.append(arrow_table(rows[name], DRIVER_DDL[name]))
+        df = t.read(spark)
+        assert dict(df.dtypes) == types, name
+        assert df.count() == 2 * len(rows[name])
+    # the driver-side aggregate holds the rows the Spark plans produce
+    assert sorted(rows["verdicts"]) == sorted(
+        tuple(r) for r in spark_written["verdicts"].collect())
+    exact = [0, 1, 2, 3, 5, 6]   # part, column, n_rows, null_count, min, max
+    assert sorted(tuple(r[i] for i in exact) for r in rows["metrics"]) == \
+        sorted(tuple(r) for r in
+               _exact_metrics(spark_written["metrics"]).collect())

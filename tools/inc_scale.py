@@ -14,8 +14,17 @@ run_once (min of PASSES cold-state repeats, each in a fresh out_dir
 copied from the consumed-history state, warm JVM). Prints one JSON
 line per H plus a markdown row for SCALE.md.
 
+``--appends N`` measures history LENGTH instead of size: one process
+consumes a DELTA_DOCS-doc history, then appends N deltas of DELTA_DOCS
+docs to one output dir and prints one JSON line per append (run_once
+wall, id-index batches the append read), then the least-squares slope
+of the wall against the batch count, over all appends and over the
+second half (the first appends also carry the JVM's warm-up curve).
+Flat append latency means the slope stays near 0.
+
 Usage: python tools/inc_scale.py [--history 100000,1000000]
                                  [--delta 100000] [--passes 3]
+       python tools/inc_scale.py --appends 60 --delta 2000
 """
 
 from __future__ import annotations
@@ -24,6 +33,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -59,17 +69,65 @@ def synth_docs(spark, start: int, n: int, dup_every: int = 0):
         did.alias("doc_id"), spans.alias("spans"))
 
 
+def slope(xs, ys) -> float:
+    """Least-squares slope of ys against xs."""
+    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+    var = sum((x - mx) ** 2 for x in xs)
+    return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / var
+
+
+def run_appends(spark, media, pipe, n_appends: int, delta: int) -> None:
+    work = tempfile.mkdtemp(prefix="inc_appends_")
+    corpus = SnapshotTable(work, "corpus")
+    inc = IncrementalValidator(corpus, os.path.join(work, "out"),
+                               pipeline=pipe)
+    corpus.append(synth_docs(spark, 0, delta).coalesce(4))
+    inc.run_once(spark, media)  # the history (untimed)
+    index = inc.tables["id_index"]
+    xs, ys = [], []
+    for k in range(1, n_appends + 1):
+        # disjoint id slot per append; 1-in-1000 rows collide back into
+        # the history (real cross-snapshot work on every append)
+        corpus.append(synth_docs(spark, k * 10_000_000_000, delta,
+                                 dup_every=1000).coalesce(4))
+        batches = len(index.committed_batches())
+        t0 = time.time()
+        inc.run_once(spark, media)
+        dt = time.time() - t0
+        xs.append(batches)
+        ys.append(dt)
+        print(json.dumps({"append": k, "run_once_s": round(dt, 3),
+                          "id_index_batches": batches}), flush=True)
+    half = n_appends // 2
+    print(json.dumps({
+        "appends": n_appends, "delta": delta,
+        "slope_s_per_batch": round(slope(xs, ys), 5),
+        "slope_second_half_s_per_batch": round(
+            slope(xs[half:], ys[half:]), 5),
+        "first_median_s": round(statistics.median(ys[:10]), 3),
+        "last_median_s": round(statistics.median(ys[-10:]), 3)}),
+        flush=True)
+    shutil.rmtree(work, ignore_errors=True)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--history", default="100000,1000000")
     ap.add_argument("--delta", type=int, default=100000)
     ap.add_argument("--passes", type=int, default=3)
+    ap.add_argument("--appends", type=int, default=0)
     args = ap.parse_args()
+    if 0 < args.appends < 20:
+        ap.error("--appends needs at least 20 appends for two slopes "
+                 "and the first/last-10 medians")
     sizes = [int(s) for s in args.history.split(",")]
 
     spark = get_spark("inc-scale")
     media = gen_media_dim(spark, 1000)
     pipe = ValidationPipeline(n_buckets=32, salt_buckets=64)
+    if args.appends:
+        run_appends(spark, media, pipe, args.appends, args.delta)
+        return
     rows = []
     for h in sizes:
         work = tempfile.mkdtemp(prefix=f"inc_scale_{h}_")
